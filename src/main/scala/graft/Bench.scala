@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -23,679 +24,10 @@ import org.apache.spark.sql.functions._
   *    the suite total goes up, honesty goes up with it.
   *  - ms-integer timings: stable diffs, compact JSON.
   *
-  * A `streaming` block measures end-to-end pipeline throughput (rows/sec)
-  * through QueueSource → Pipeline (processor + batcher + ack) — the
-  * reference's raison d'être is sustained pipeline throughput
-  * (/root/reference/lib/broadway.ex:12-22), which the per-query section
-  * cannot see.
+  * Streaming throughput (QueueSource → Pipeline, KeyedBatcher, the
+  * interval join) is measured by `perfbench/`, not here.
   */
 object Bench {
-
-  /** Per-phase duration accumulation via a StreamingQueryListener, not
-    * `query.recentProgress`: recentProgress is a ring buffer capped at
-    * spark.sql.streaming.numRecentProgressUpdates (default 100) entries,
-    * so runs with more micro-batches silently undercount the attribution
-    * this exists to provide. The listener sees EVERY progress event.
-    * Events are delivered asynchronously on the listener bus; `drainTo`
-    * polls until the attached query's last executed batchId has been
-    * seen (bounded), so a scenario can read its totals right after
-    * stop() without racing the bus.
-    */
-  private final class ProgressAccumulator
-      extends org.apache.spark.sql.streaming.StreamingQueryListener {
-    import org.apache.spark.sql.streaming.StreamingQueryListener._
-    private val durations = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-    @volatile private var maxBatchId = -1L
-    @volatile private var filter: java.util.UUID = null
-    // peak state footprint across batches (sum over the query's state
-    // operators): rows + provider memory — the evidence behind the
-    // "size shuffle width to state volume / RocksDB for state beyond
-    // heap" guidance, straight from Spark's own progress metrics
-    @volatile var stateRowsMax = -1L
-    @volatile var stateMemMax = -1L
-    def attach(id: java.util.UUID): Unit = {
-      durations.clear(); maxBatchId = -1L; stateRowsMax = -1L; stateMemMax = -1L; filter = id
-    }
-    override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-    override def onQueryProgress(e: QueryProgressEvent): Unit =
-      if (filter != null && e.progress.id == filter) {
-        e.progress.durationMs.forEach { (k, v) =>
-          durations.merge(k, v, (a, b) => java.lang.Long.valueOf(a + b))
-        }
-        val ops = e.progress.stateOperators
-        if (ops != null && ops.nonEmpty) {
-          stateRowsMax = math.max(stateRowsMax, ops.map(_.numRowsTotal).sum)
-          stateMemMax = math.max(stateMemMax, ops.map(_.memoryUsedBytes).sum)
-        }
-        if (e.progress.batchId > maxBatchId) maxBatchId = e.progress.batchId
-      }
-    override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-    /** Totals once every batch up to `lastBatchId` has been delivered
-      * (or a 5 s drain bound passes — partial totals beat a hang).
-      */
-    def drainTo(lastBatchId: Long): Map[String, Long] = {
-      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-      while (maxBatchId < lastBatchId && System.nanoTime() < deadline) Thread.sleep(10)
-      import scala.jdk.CollectionConverters._
-      durations.asScala.map { case (k, v) => k -> v.longValue }.toMap
-    }
-  }
-
-  /** Run `body` with session confs temporarily overridden — streaming
-    * queries clone the session conf at start(), so an override set here
-    * binds the QUERY (state-store provider, stateful shuffle width) and
-    * the restore cannot disturb it mid-run.
-    */
-  private def withConfs[A](spark: SparkSession, confs: Seq[(String, String)])(body: => A): A = {
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
-  private val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  /** One end-to-end pipeline throughput scenario over `rows` messages:
-    * `waves` pushes of `rows/waves` each, drained by processAllAvailable
-    * between pushes. waves=1 is the BURST shape (whole backlog admitted
-    * at once → few large micro-batches → the pipeline's max throughput);
-    * waves=8 is the SUSTAINED shape (every wave pays trigger scheduling +
-    * ack round-trips, the steady-state cadence cost).
-    */
-  private def streamingScenario(
-      spark: SparkSession,
-      rows: Int,
-      waves: Int,
-      withBatcher: Boolean = true,
-      rateLimit: Option[(Int, Long)] = None,
-      acc: Option[ProgressAccumulator] = None
-  ): (Long, Double, Long, Long, Map[String, Long]) = {
-    import spark.implicits._
-    import graft.config.{BatcherConfig, PipelineConfig}
-    import graft.core.Pipeline
-    import graft.model.Message
-    import graft.sources.QueueSource
-    import graft.ack.NoopAcknowledger
-
-    val qName = s"bench-throughput-$waves${if (withBatcher) "" else "-single-group"}" +
-      rateLimit.map { case (a, i) => s"-rl$a-$i" }.getOrElse("")
-    val limiter = rateLimit.map { case (a, i) => new graft.core.RateLimiter(a, i) }
-    val q = QueueSource.create(qName, limiter)
-    try {
-      val messages = spark.readStream
-        .format("graft.sources.QueueSourceProvider")
-        .option("queue", qName)
-        .load()
-        .select(col("offset"), col("value"))
-        .as[(Long, String)]
-        .map { case (off, v) => Message(v, metadata = Map("seq" -> off.toString)) }
-      // Representative per-message work: a parse-ish transform plus a
-      // batch-key route, so the batcher shuffle and per-group chunking are
-      // exercised — not a pass-through that measures only trigger latency.
-      // the single_group shape keeps the same per-message transform but
-      // no batch key and a huge batch size: the batcher's groupByKey
-      // shuffle STILL runs (a pipeline always has ≥1 batcher), but it
-      // lands in ONE constant-key group with one handle_batch call — so
-      // the delta vs the keyed shape measures the keyed-batching layer
-      // (16-way grouping, ~1000 handle_batch invocations, per-group
-      // chunking), NOT the shuffle itself, which both shapes pay.
-      // One transform definition shared by both shapes so they can't
-      // silently diverge and invalidate the comparison.
-      val transform: Message[String] => Message[String] =
-        m => m.updateData(d => d.toUpperCase + ":" + d.length)
-      val cfg = PipelineConfig[String](
-        name = qName,
-        handleMessage =
-          if (withBatcher)
-            transform.andThen(m => m.putBatchKey((math.floorMod(m.data.hashCode, 16)).toString))
-          else transform,
-        batchers =
-          Seq(BatcherConfig[String]("default", batchSize = if (withBatcher) 200 else 1 << 20))
-      )
-      val running = Pipeline.start(spark, messages, cfg, NoopAcknowledger)
-      acc.foreach(_.attach(running.query.id))
-      try {
-        val perWave = rows / waves
-        // payloads ~48 chars: enough bytes that serialization is visible,
-        // deterministic content (no RNG) so runs are comparable
-        val t0 = System.nanoTime()
-        var w = 0
-        while (w < waves) {
-          val base = w * perWave
-          q.push((0 until perWave).map(i => s"evt-${base + i}-payload-${(base + i) % 997}-abcdefghijklmnop"): _*)
-          running.processAllAvailable()
-          w += 1
-        }
-        // under a rate limiter, "all available" is only the ADMITTED
-        // backlog — later replenishes expose more; poll until everything
-        // pushed has actually flowed through (bounded at 120 s)
-        if (limiter.nonEmpty) {
-          val target = perWave.toLong * waves
-          val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-          while (running.stageMetrics.map(_.processorProcessed).getOrElse(-1L) < target &&
-            System.nanoTime() < deadline) {
-            running.processAllAvailable()
-            Thread.sleep(5)
-          }
-        }
-        val sec = (System.nanoTime() - t0) / 1e9
-        val processed = running.stageMetrics.map(_.processorProcessed).getOrElse(-1L)
-        val microBatches = Option(running.query.lastProgress).map(_.batchId + 1).getOrElse(-1L)
-        // per-phase attribution: Spark's own per-micro-batch durationMs
-        // (triggerExecution = whole batch; addBatch = the data plan;
-        // walCommit/commitOffsets/latestOffset = per-batch fixed costs) —
-        // summed across the run via the listener (every batch, not the
-        // capped recentProgress ring), this NAMES where a cadence shape
-        // spends its extra wall time relative to the burst shape
-        val durations: Map[String, Long] =
-          acc.map(_.drainTo(microBatches - 1)).getOrElse(Map.empty)
-        (perWave.toLong * waves, sec, processed, microBatches, durations)
-      } finally running.stop()
-    } finally {
-      QueueSource.remove(qName)
-      limiter.foreach(_.shutdown())
-    }
-  }
-
-  /** Drain-guarantee scenario (the reference's graceful-shutdown contract,
-    * topology/terminator.ex:41-60): push a full backlog, then IMMEDIATELY
-    * call the pipeline's graceful stop — the drain must process every
-    * pushed row before the query terminates. Reports the wall time of the
-    * stop() call itself (drain latency) plus the processed count proving
-    * the guarantee held under load.
-    */
-  private def drainScenario(
-      spark: SparkSession,
-      rows: Int,
-      acc: Option[ProgressAccumulator] = None
-  ): (Long, Double, Long, Map[String, Long]) = {
-    import spark.implicits._
-    import graft.config.{BatcherConfig, PipelineConfig}
-    import graft.core.Pipeline
-    import graft.model.Message
-    import graft.sources.QueueSource
-    import graft.ack.NoopAcknowledger
-
-    val qName = "bench-drain"
-    val q = QueueSource.create(qName, None)
-    try {
-      val messages = spark.readStream
-        .format("graft.sources.QueueSourceProvider")
-        .option("queue", qName)
-        .load()
-        .select(col("offset"), col("value"))
-        .as[(Long, String)]
-        .map { case (off, v) => Message(v, metadata = Map("seq" -> off.toString)) }
-      val cfg = PipelineConfig[String](
-        name = qName,
-        handleMessage = m => m
-          .updateData(d => d.toUpperCase + ":" + d.length)
-          .putBatchKey((math.floorMod(m.data.hashCode, 16)).toString),
-        batchers = Seq(BatcherConfig[String]("default", batchSize = 200))
-      )
-      val running = Pipeline.start(spark, messages, cfg, NoopAcknowledger)
-      acc.foreach(_.attach(running.query.id))
-      q.push((0 until rows).map(i => s"evt-$i-payload-${i % 997}-abcdefghijklmnop"): _*)
-      val t0 = System.nanoTime()
-      running.stop() // graceful: drains the backlog before terminating
-      val drainSec = (System.nanoTime() - t0) / 1e9
-      val processed = running.stageMetrics.map(_.processorProcessed).getOrElse(-1L)
-      val batches = Option(running.query.lastProgress).map(_.batchId + 1).getOrElse(-1L)
-      val durations = acc.map(_.drainTo(batches - 1)).getOrElse(Map.empty)
-      (rows.toLong, drainSec, processed, durations)
-    } finally QueueSource.remove(qName)
-  }
-
-  /** Stream-stream event-time interval join throughput
-    * (EventTime.intervalJoin — the stateful join the refused stream-static
-    * shapes name as their remediation): `rows/2` clicks × `rows/2` buys
-    * over 1000 keys, event times ascending so the watermark advances and
-    * join state evicts (the steady-state regime), fed in 4 waves per side.
-    * Returns (input rows, wall sec, matched rows, micro-batches).
-    */
-  private def intervalJoinScenario(
-      spark: SparkSession,
-      rows: Int,
-      acc: Option[ProgressAccumulator] = None,
-      provider: Option[String] = None,
-      statefulPartitions: Option[Int] = None,
-      extraConfs: Seq[(String, String)] = Nil,
-      // width via the OPERATOR parameter (EventTime.intervalJoin
-      // statePartitions) instead of the session conf — the
-      // interval_join_auto variant proves the first-class knob reproduces
-      // the hand-tuned conf number. The DEFAULT here is the operator's
-      // own default (AutoStatePartitions), so the headline axis measures
-      // what a user on defaults actually gets; conf-posture axes pass
-      // None explicitly to preserve their historical meaning.
-      opStatePartitions: Option[Int] = graft.streaming.EventTime.AutoStatePartitions
-  ): (Long, Double, Long, Long, Map[String, Long]) = {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val perSide = rows / 2
-    def ts(sec: Long) = new java.sql.Timestamp(1700000000000L + sec * 1000)
-    val cs = MemoryStream[(Long, java.sql.Timestamp)]
-    val bs = MemoryStream[(Long, java.sql.Timestamp, Double)]
-    val joined = graft.streaming.EventTime.intervalJoin(
-      cs.toDF().toDF("user_id", "click_ts"), "click_ts",
-      bs.toDF().toDF("user_id", "buy_ts", "amount"), "buy_ts",
-      Seq("user_id"), watermarkDelay = "10 minutes", within = "5 minutes",
-      statePartitions = opStatePartitions)
-    val matched = new java.util.concurrent.atomic.AtomicLong()
-    // provider / stateful shuffle width bind at start() (the query clones
-    // the session conf); a stream-stream join runs 4 state stores per
-    // partition per micro-batch, so BOTH knobs gate the per-batch fixed
-    // cost this scenario exists to attribute
-    val confs = provider.map("spark.sql.streaming.stateStore.providerClass" -> _).toSeq ++
-      statefulPartitions.map("spark.sql.shuffle.partitions" -> _.toString).toSeq ++ extraConfs
-    val q = withConfs(spark, confs) {
-      joined.writeStream
-        .outputMode("append")
-        .foreachBatch { (d: org.apache.spark.sql.DataFrame, _: Long) =>
-          matched.addAndGet(d.count()); ()
-        }
-        .start()
-    }
-    // an operator-level statePartitions rebases the plan onto a CLONED
-    // session, and streaming listener events are per-session — register
-    // the accumulator with the query's own session or its progress (and
-    // state metrics) are invisible (the exact caveat bindStatePartitions
-    // documents for users)
-    val qSession = joined.sparkSession
-    val crossSession = qSession ne spark
-    if (crossSession) acc.foreach(qSession.streams.addListener)
-    acc.foreach(_.attach(q.id))
-    try {
-      val waves = 4
-      val perWave = perSide / waves
-      val t0 = System.nanoTime()
-      var w = 0
-      while (w < waves) {
-        val base = w * perWave
-        // clicks 1/sec across 1000 users; each buy lands 0-299 s after a
-        // click's window opens, so matches are plentiful but bounded
-        cs.addData((0 until perWave).map(i => ((base + i) % 1000L, ts(base + i))))
-        bs.addData((0 until perWave).map(i =>
-          ((base + i) % 1000L, ts(base + i + (i % 300)), (i % 50) + 1.0)))
-        q.processAllAvailable()
-        w += 1
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val batches = Option(q.lastProgress).map(_.batchId + 1).getOrElse(-1L)
-      val durations = acc.map(_.drainTo(batches - 1)).getOrElse(Map.empty)
-      (2L * perWave * waves, sec, matched.get(), batches, durations)
-    } finally {
-      q.stop()
-      if (crossSession) acc.foreach(qSession.streams.removeListener)
-    }
-  }
-
-  /** Stream-stream bounded-lookback AS-OF throughput
-    * (EventTime.asofJoinBounded — the three-stateful-op composition:
-    * time-bound join → watermark-finalized max_by): same feed shape as
-    * the interval scenario; the delta against it prices the added
-    * aggregation state. Emitted rows trail input by the un-finalized
-    * watermark tail (groups close when the watermark passes their left
-    * time), so `matched` ≈ left rows − delay·rate.
-    */
-  private def asofBoundedScenario(
-      spark: SparkSession,
-      rows: Int,
-      acc: Option[ProgressAccumulator] = None,
-      statefulPartitions: Option[Int] = None,
-      // defaults to the operator's own default posture (see intervalJoinScenario)
-      opStatePartitions: Option[Int] = graft.streaming.EventTime.AutoStatePartitions
-  ): (Long, Double, Long, Long, Map[String, Long]) = {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val perSide = rows / 2
-    def ts(sec: Long) = new java.sql.Timestamp(1700000000000L + sec * 1000)
-    val cs = MemoryStream[(Long, java.sql.Timestamp)]
-    val is = MemoryStream[(Long, java.sql.Timestamp, Double)]
-    val joined = graft.streaming.EventTime.asofJoinBounded(
-      cs.toDF().toDF("user_id", "click_ts"), "click_ts",
-      is.toDF().toDF("user_id", "imp_ts", "cost"), "imp_ts",
-      Seq("user_id"), watermarkDelay = "10 minutes", lookback = "5 minutes",
-      outer = true, statePartitions = opStatePartitions)
-    val emitted = new java.util.concurrent.atomic.AtomicLong()
-    val confs =
-      statefulPartitions.map("spark.sql.shuffle.partitions" -> _.toString).toSeq
-    val q = withConfs(spark, confs) {
-      joined.writeStream
-        .outputMode("append")
-        .foreachBatch { (d: org.apache.spark.sql.DataFrame, _: Long) =>
-          emitted.addAndGet(d.count()); ()
-        }
-        .start()
-    }
-    // operator-level width ⇒ cloned session ⇒ per-session listener events
-    val qSession = joined.sparkSession
-    val crossSession = qSession ne spark
-    if (crossSession) acc.foreach(qSession.streams.addListener)
-    acc.foreach(_.attach(q.id))
-    try {
-      val waves = 4
-      val perWave = perSide / waves
-      val t0 = System.nanoTime()
-      var w = 0
-      while (w < waves) {
-        val base = w * perWave
-        cs.addData((0 until perWave).map(i => ((base + i) % 1000L, ts(base + i))))
-        // each impression lands 0-299 s BEFORE some click's lookback opens
-        is.addData((0 until perWave).map(i =>
-          ((base + i) % 1000L, ts(math.max(0, base + i - (i % 300))), (i % 50) + 1.0)))
-        q.processAllAvailable()
-        w += 1
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val batches = Option(q.lastProgress).map(_.batchId + 1).getOrElse(-1L)
-      val durations = acc.map(_.drainTo(batches - 1)).getOrElse(Map.empty)
-      (2L * perWave * waves, sec, emitted.get(), batches, durations)
-    } finally {
-      q.stop()
-      if (crossSession) acc.foreach(qSession.streams.removeListener)
-    }
-  }
-
-  /** All five streaming scenarios as one JSON object. burst/sustained/
-    * single_group triangulate the keyed-batching and cadence costs;
-    * rate_limited measures the admission machinery (25k tokens / 100 ms =
-    * 250k rows/s cap — above pipeline throughput, so the delta vs burst
-    * is bookkeeping + replenish cadence, not a binding limit); drain
-    * measures the graceful-shutdown guarantee under a full backlog.
-    */
-  private[graft] def streamingBlockJson(spark: SparkSession, rows: Int): String = {
-    val acc = new ProgressAccumulator
-    spark.streams.addListener(acc)
-    try streamingBlockJsonInner(spark, rows, acc)
-    finally spark.streams.removeListener(acc)
-  }
-
-  /** The bounded as-of variants (default width / width 8) for scale runs —
-    * `StreamBench` dispatches here when SPARK_GRAFT_STREAM_ONLY=asof_bounded.
-    */
-  private[graft] def asofBoundedBlockJson(spark: SparkSession, rows: Int): String = {
-    val acc0 = new ProgressAccumulator
-    spark.streams.addListener(acc0)
-    try {
-      val acc = Some(acc0)
-      asofBoundedScenario(spark, math.min(rows / 10, 20000))
-      var defaultStateBytes = -1L
-      val variants = Seq(
-        ("asof_bounded", None, None),
-        ("asof_bounded_p8", Some(8), None),
-        // closed loop: width from the DEFAULT run's measured peak state
-        // via the heuristic, applied through the operator parameter
-        ("asof_bounded_auto", None, Some(())) // resolved below once defaultStateBytes is known
-      ).map { case (name, parts, auto) =>
-        val opParts: Option[Int] = (name, auto) match {
-          case (_, Some(_)) => Some(
-            graft.streaming.EventTime.statePartitionsForVolume(math.max(0L, defaultStateBytes)))
-          // the headline axis runs the operator DEFAULT (auto floor) —
-          // proving default == auto is the point of the triangle now
-          case ("asof_bounded", _) => graft.streaming.EventTime.AutoStatePartitions
-          // hand-set session-conf axes keep the conf posture (None = inherit)
-          case _ => None
-        }
-        val (r, sec, emitted, batches, dur) =
-          asofBoundedScenario(spark, rows, acc = acc, statefulPartitions = parts,
-            opStatePartitions = opParts)
-        if (name == "asof_bounded") defaultStateBytes = acc0.stateMemMax
-        val widthJson = opParts match {
-          case s if s.asInstanceOf[AnyRef] eq graft.streaming.EventTime.AutoStatePartitions =>
-            ""","width":"auto""""
-          case Some(p) => s""","width":$p"""
-          case None => ""
-        }
-        val durJson =
-          dur.toSeq.sortBy(-_._2).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-        s""""$name":{"sec":${math.round(sec * 1000) / 1000.0},"rows_per_sec":${math.round(r / sec)},"emitted":$emitted,"micro_batches":$batches,"state_rows_max":${acc0.stateRowsMax},"state_mem_mb":${acc0.stateMemMax / (1 << 20)}$widthJson,"durations_ms":$durJson}"""
-      }
-      s"""{"rows":$rows,${variants.mkString(",")}}"""
-    } finally spark.streams.removeListener(acc0)
-  }
-
-  /** Just the stream-stream interval-join variants (default / RocksDB /
-    * width-8 / both), for scale runs where the pipeline scenarios would
-    * dominate the wall clock — `StreamBench` dispatches here when
-    * SPARK_GRAFT_STREAM_ONLY=interval_join. At 10× the bench row count
-    * this is the stress evidence that the width knob's win is a fixed-
-    * cost story (it must SHRINK as real data volume grows) and that
-    * RocksDB holds at bigger state.
-    */
-  private[graft] def intervalJoinBlockJson(spark: SparkSession, rows: Int): String = {
-    val acc0 = new ProgressAccumulator
-    spark.streams.addListener(acc0)
-    try {
-      val acc = Some(acc0)
-      // untimed warmup at a fraction of the size: codegen + state-store
-      // init otherwise lands on the first variant
-      intervalJoinScenario(spark, math.min(rows / 10, 20000))
-      // changelog checkpointing is the deployment flag that amortizes
-      // RocksDB's per-commit cost (upload a changelog, snapshot in the
-      // background) — the scale path measures whether it closes the
-      // provider's throughput gap at heap-sized state
-      val changelog = Seq(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
-      val variants = Seq(
-        ("interval_join", None, None, Nil),
-        ("interval_join_rocksdb", Some(RocksDbProvider), None, Nil),
-        ("interval_join_p8", None, Some(8), Nil),
-        ("interval_join_rocksdb_p8", Some(RocksDbProvider), Some(8), Nil),
-        ("interval_join_rocksdb_p8_changelog", Some(RocksDbProvider), Some(8), changelog)
-      ).map { case (name, prov, parts, extra) =>
-        val (r, sec, matched, batches, dur) =
-          intervalJoinScenario(spark, rows, acc = acc, provider = prov,
-            statefulPartitions = parts, extraConfs = extra)
-        val durJson =
-          dur.toSeq.sortBy(-_._2).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-        s""""$name":{"sec":${math.round(sec * 1000) / 1000.0},"rows_per_sec":${math.round(r / sec)},"matched":$matched,"micro_batches":$batches,"state_rows_max":${acc0.stateRowsMax},"state_mem_mb":${acc0.stateMemMax / (1 << 20)},"durations_ms":$durJson}"""
-      }
-      s"""{"rows":$rows,${variants.mkString(",")}}"""
-    } finally spark.streams.removeListener(acc0)
-  }
-
-  private def streamingBlockJsonInner(
-      spark: SparkSession,
-      rows: Int,
-      acc0: ProgressAccumulator
-  ): String = {
-    val acc = Some(acc0)
-    // SPARK_GRAFT_STATE_PROVIDER=rocksdb runs the WHOLE block (the
-    // pipeline scenarios' batcher state included) on the RocksDB state
-    // store — the provider a 100 TB-state deployment would pick; default
-    // stays the HDFS-backed heap provider so round-over-round numbers
-    // keep their meaning. interval_join always benches BOTH providers.
-    val blockProvider = sys.env.get("SPARK_GRAFT_STATE_PROVIDER").map {
-      case "rocksdb" => RocksDbProvider
-      case other     => other
-    }
-    val blockConfs =
-      blockProvider.map("spark.sql.streaming.stateStore.providerClass" -> _).toSeq
-    // Machine-drift calibration for the STREAMING axes (VERDICT r16 #2):
-    // the batch calibration probe is batch-shaped, so streaming fixed
-    // costs (trigger scheduling, state-store load/commit, listener bus)
-    // cannot be drift-normalized from it — r16's 3-30% axis drops could
-    // not be separated from a measured ~1.9× machine slowdown. This probe
-    // is one FIXED micro-scenario — memory source → keyed count → noop
-    // sink, 50k rows in 4 waves, stateful width pinned to 8 — whose work
-    // never changes round-over-round: untimed once (streaming-agg
-    // codegen + state-store init), then the median of 3 timed runs.
-    // Readers divide cross-round streaming ratios by this before calling
-    // an axis a regression, exactly like calibration_ms for queries.
-    def streamingCalibrationRun(): Double = {
-      import spark.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val ms = MemoryStream[Long]
-      val agg = ms.toDF().toDF("id")
-        .select((col("id") % 64).as("k"))
-        .groupBy(col("k")).agg(count(lit(1)).as("c"))
-      val q = withConfs(spark, Seq("spark.sql.shuffle.partitions" -> "8")) {
-        agg.writeStream.outputMode("update")
-          .foreachBatch { (d: org.apache.spark.sql.DataFrame, _: Long) =>
-            d.write.mode("overwrite").format("noop").save(); ()
-          }
-          .start()
-      }
-      try {
-        val t0 = System.nanoTime()
-        var w = 0
-        while (w < 4) {
-          ms.addData((0 until 12500).map(i => (w * 12500 + i).toLong))
-          q.processAllAvailable()
-          w += 1
-        }
-        (System.nanoTime() - t0) / 1e9
-      } finally q.stop()
-    }
-    val streamCalibrationSec: Double = {
-      streamingCalibrationRun() // untimed: codegen + state-store init
-      Seq(streamingCalibrationRun(), streamingCalibrationRun(), streamingCalibrationRun())
-        .sorted.apply(1)
-    }
-    withConfs(spark, blockConfs) {
-      // untimed warmup: the first pipeline run pays streaming codegen,
-      // state-store and sink init (~3-4 s) — without this it all lands on
-      // whichever scenario runs first and corrupts the cross-scenario
-      // deltas the block exists to attribute
-      streamingScenario(spark, math.min(rows / 10, 20000), waves = 1)
-      val (bRows, bSec, bProc, bBatches, bDur) = streamingScenario(spark, rows, waves = 1, acc = acc)
-      val (sRows, sSec, sProc, sBatches, sDur) = streamingScenario(spark, rows, waves = 8, acc = acc)
-      val (mRows, mSec, mProc, mBatches, mDur) =
-        streamingScenario(spark, rows, waves = 1, withBatcher = false, acc = acc)
-      val (rRows, rSec, rProc, rBatches, rDur) =
-        streamingScenario(spark, rows, waves = 1, rateLimit = Some((25000, 100L)), acc = acc)
-      val (dRows, dSec, dProc, dDur) = drainScenario(spark, rows, acc = acc)
-      // the stream-stream join, attributed: default provider/width as the
-      // headline, then the two knobs a deployment would turn — RocksDB
-      // state store and a narrower stateful shuffle (the join pays
-      // 4 state-store commits × partitions × micro-batches regardless of
-      // data volume, so at bench scale store fixed costs dominate; the
-      // variants put numbers on exactly that)
-      def state() = (acc0.stateRowsMax, acc0.stateMemMax)
-      // untimed join-specific warmup: the stream-stream join's own
-      // codegen + 4-store state machinery is NOT covered by the pipeline
-      // warmup above, and since the headline axis became the operator
-      // default (== the fast path), its first-run charge was the only
-      // thing separating default from the auto axis — warm it so the
-      // default==auto comparison is apples-to-apples
-      intervalJoinScenario(spark, math.min(rows / 10, 20000))
-      val (ijRows, ijSec, ijMatched, ijBatches, ijDur) = intervalJoinScenario(spark, rows, acc = acc)
-      val ijState = state()
-      val (_, rkSec, rkMatched, _, rkDur) =
-        intervalJoinScenario(spark, rows, acc = acc, provider = Some(RocksDbProvider),
-          opStatePartitions = None)
-      val rkState = state()
-      val (_, p8Sec, p8Matched, _, p8Dur) =
-        intervalJoinScenario(spark, rows, acc = acc, statefulPartitions = Some(8),
-          opStatePartitions = None)
-      val p8State = state()
-      val (_, rkp8Sec, rkp8Matched, _, rkp8Dur) =
-        intervalJoinScenario(spark, rows, acc = acc,
-          provider = Some(RocksDbProvider), statefulPartitions = Some(8),
-          opStatePartitions = None)
-      val rkp8State = state()
-      // the first-class knob, closed-loop: width derived from the DEFAULT
-      // run's measured peak state via the documented heuristic, applied
-      // through the OPERATOR parameter (not session conf) — this line
-      // within ~15% of the hand-tuned p8 number is the evidence that a
-      // deployment following the Scaladoc recipe lands on the tuned
-      // configuration without touching session conf
-      val autoWidth = graft.streaming.EventTime.statePartitionsForVolume(
-        math.max(0L, ijState._2))
-      val (_, autoSec, autoMatched, _, autoDur) =
-        intervalJoinScenario(spark, rows, acc = acc, opStatePartitions = Some(autoWidth))
-      val autoState = state()
-      // bounded as-of (the three-stateful-op composition: time-bound join →
-      // watermark-finalized max_by), folded into the default block so the
-      // numbers the NOTES gate cites live in COMMITTED artifacts (r13
-      // finding #4: they previously ran only under a STREAM_ONLY env the
-      // driver never sets). Same default / hand-tuned p8 / closed-loop
-      // auto triangle as interval_join.
-      asofBoundedScenario(spark, math.min(rows / 10, 20000)) // untimed: agg-state codegen
-      val (abRows, abSec, abEmitted, abBatches, abDur) = asofBoundedScenario(spark, rows, acc = acc)
-      val abState = state()
-      val (_, abp8Sec, abp8Emitted, _, abp8Dur) =
-        asofBoundedScenario(spark, rows, acc = acc, statefulPartitions = Some(8),
-          opStatePartitions = None)
-      val abp8State = state()
-      val abAutoWidth = graft.streaming.EventTime.statePartitionsForVolume(
-        math.max(0L, abState._2))
-      val (_, abAutoSec, abAutoEmitted, _, abAutoDur) =
-        asofBoundedScenario(spark, rows, acc = acc, opStatePartitions = Some(abAutoWidth))
-      val abAutoState = state()
-      def durJson(d: Map[String, Long]) =
-        d.toSeq.sortBy(-_._2).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-      def block(r: Long, sec: Double, proc: Long, batches: Long, d: Map[String, Long]) =
-        s"""{"sec":${math.round(sec * 1000) / 1000.0},"rows_per_sec":${math.round(r / sec)},"processed":$proc,"micro_batches":$batches,"durations_ms":${durJson(d)}}"""
-      def ijBlock(sec: Double, m: Long, d: Map[String, Long], st: (Long, Long)) =
-        s"""{"sec":${math.round(sec * 1000) / 1000.0},"rows_per_sec":${math.round(ijRows / sec)},"matched":$m,"state_rows_max":${st._1},"state_mem_mb":${st._2 / (1 << 20)},"durations_ms":${durJson(d)}}"""
-      def abBlock(sec: Double, e: Long, d: Map[String, Long], st: (Long, Long)) =
-        s"""{"sec":${math.round(sec * 1000) / 1000.0},"rows_per_sec":${math.round(abRows / sec)},"emitted":$e,"state_rows_max":${st._1},"state_mem_mb":${st._2 / (1 << 20)},"durations_ms":${durJson(d)}}"""
-      s"""{"rows":$bRows,"state_provider":"${blockProvider.map(_.split('.').last).getOrElse("HDFSBackedStateStoreProvider")}","calibration_sec":${math.round(streamCalibrationSec * 1000) / 1000.0},""" +
-        s""""burst":${block(bRows, bSec, bProc, bBatches, bDur)},""" +
-        s""""sustained":${block(sRows, sSec, sProc, sBatches, sDur)},""" +
-        s""""single_group":${block(mRows, mSec, mProc, mBatches, mDur)},""" +
-        s""""rate_limited":${block(rRows, rSec, rProc, rBatches, rDur)},""" +
-        s""""drain":{"drain_sec":${math.round(dSec * 1000) / 1000.0},"rows_per_sec":${math.round(dRows / dSec)},"processed":$dProc,"durations_ms":${durJson(dDur)}},""" +
-        s""""interval_join":${ijBlock(ijSec, ijMatched, ijDur, ijState).dropRight(1)},"micro_batches":$ijBatches},""" +
-        s""""interval_join_rocksdb":${ijBlock(rkSec, rkMatched, rkDur, rkState)},""" +
-        s""""interval_join_p8":${ijBlock(p8Sec, p8Matched, p8Dur, p8State)},""" +
-        s""""interval_join_rocksdb_p8":${ijBlock(rkp8Sec, rkp8Matched, rkp8Dur, rkp8State)},""" +
-        s""""interval_join_auto":${ijBlock(autoSec, autoMatched, autoDur, autoState).dropRight(1)},"width":$autoWidth},""" +
-        s""""asof_bounded":${abBlock(abSec, abEmitted, abDur, abState).dropRight(1)},"micro_batches":$abBatches},""" +
-        s""""asof_bounded_p8":${abBlock(abp8Sec, abp8Emitted, abp8Dur, abp8State)},""" +
-        s""""asof_bounded_auto":${abBlock(abAutoSec, abAutoEmitted, abAutoDur, abAutoState).dropRight(1)},"width":$abAutoWidth}}"""
-    }
-  }
-
-  /** VERDICT r15 #6 measurement: the custom AsOfJoinExec against the
-    * equivalent SMJ + per-key window shape at matched output — the
-    * decision input for whether implementing CodegenSupport on the custom
-    * node (SMJ-class effort) would pay. The custom node's merge loop runs
-    * at an iterator boundary (no whole-stage codegen); the SMJ form fuses
-    * into generated code but pays a fan-out join + window dedup. If
-    * custom ≲ SMJ, the boundary is NOT the dominant cost and the codegen
-    * idea retires with a number; custom ≫ SMJ at equal output would
-    * justify it. Median of three warm noop-writes each, matched row
-    * counts reported so the comparison is verifiably apples-to-apples.
-    */
-  private def asofExecVsSmjJson(spark: SparkSession, sfDir: String): String = {
-    import org.apache.spark.sql.expressions.Window
-    val ev = graft.ops.Tables.events(spark, sfDir)
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val views = ev.filter(col("event_type") === "view")
-      .select(col("event_id").as("v_id"), col("user_id").as("v_user"),
-        col("ts").as("vts"), col("value").as("v_value"))
-    def custom() = graft.plans.AsOf.asofJoin(
-      clicks, views, Seq("user_id"), Seq("v_user"), "ts", "vts",
-      rightTieBreak = Seq("v_id"))
-    def smj() = {
-      val j = clicks.join(views, col("user_id") === col("v_user") && col("vts") <= col("ts"))
-      val w = Window.partitionBy(col("event_id")).orderBy(col("vts").desc, col("v_id").desc)
-      j.withColumn("__rk", row_number().over(w)).filter(col("__rk") === 1).drop("__rk")
-    }
-    def time(f: () => org.apache.spark.sql.DataFrame): (Long, Long) = {
-      f().write.mode("overwrite").format("noop").save() // codegen + warmup, untimed
-      val rows = f().count()
-      val ms = Seq.fill(3) {
-        val t0 = System.nanoTime()
-        f().write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1000000L
-      }.sorted.apply(1)
-      (ms, rows)
-    }
-    val (cMs, cRows) = time(() => custom())
-    val (sMs, sRows) = time(() => smj())
-    s"""{"custom_ms":$cMs,"smj_ms":$sMs,"custom_rows":$cRows,"smj_rows":$sRows}"""
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -711,8 +43,8 @@ object Bench {
       // default 100 entries: with 259 queries × ~10 codegen fragments each
       // plus shared builds REBUILT per query (Caches.invalidate between
       // queries — identical generated source each time), a 100-entry LRU
-      // recompiles the same Janino classes all suite long. Measured on the
-      // 12-query shared-build mini-suite (Prof minisuite): pass-1 wall
+      // recompiles the same Janino classes all suite long. Measured on a
+      // 12-query shared-build mini-suite: pass-1 wall
       // 85.6 s → 49.1 s and Janino 19.0 s → 7.8 s; warm pass Janino
       // 5.4 s → 0.27 s. Not a local[32] artifact: any long-lived session
       // running a broad operator library hits the same eviction churn.
@@ -884,7 +216,7 @@ object Bench {
         val ok =
           try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true }
           catch {
-            case e: Throwable =>
+            case NonFatal(e) =>
               System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
               false
           }
@@ -899,8 +231,6 @@ object Bench {
     val codegenMeasuredTotalMs = timedRuns.map(_._5).sum
     val results = timedRuns.map(t => (t._1, t._2, t._3))
     graft.ops.Caches.invalidate()
-    // custom-exec iterator-boundary measurement (BENCH_DETAIL only)
-    val asofVsSmj = asofExecVsSmjJson(spark, sfDir)
 
     val failed = results.filter(!_._3).map(_._1)
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -972,105 +302,23 @@ object Bench {
             (System.nanoTime() - t0) / 1000000L
           }.sorted.apply(1)
           SlowDetail(constructMs, builds, w)
-        } catch { case _: Throwable => SlowDetail(-1L, Nil, -1L) }
+        } catch {
+          case NonFatal(e) =>
+            System.err.println(
+              s"[bench] $name decomposition FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
+            SlowDetail(-1L, Nil, -1L)
+        }
       name -> d
     }.toMap
     graft.ops.Caches.invalidate()
     val warmMs: Map[String, Long] = slowDetail.map { case (n, d) => n -> d.warmMs }
-    // the shared materializations that dominate the 4×-flagged tail
-    // (verified-pair LSH build, connected-component labels, embedding
-    // band postings): timing each build cold on its own line makes the
-    // slow list explicable — a flagged query's cold ≈ its warm_ms + the
-    // build(s) it pays — without changing what any query is charged
-    val sharedBuilds: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-      "lsh_pairs" -> (() => graft.ops.DedupOps.lshPairs(spark, sfDir, 0.8)),
-      "dedup_clusters" -> (() => graft.ops.DedupOps.dedupClusters(spark, sfDir, 0.8)),
-      // the ORACLE geometry — what the flagged q42/q47 lines actually
-      // build, so cold ≈ warm + this charge reconciles; the derived
-      // default is timed on its own line for the geometry comparison
-      "embedding_neardup_pairs" -> (() => graft.ops.SimilarityOps
-        .embeddingNeardupPairs(spark, sfDir, Some(graft.ops.SimilarityOps.OracleGeometry))),
-      "embedding_neardup_pairs_derived" -> (() =>
-        graft.ops.SimilarityOps.embeddingNeardupPairs(spark, sfDir))
-    )
-    val sharedJson =
-      if (only.nonEmpty) "null"
-      else sharedBuilds.map { case (n, f) =>
-        graft.ops.Caches.invalidate()
-        val t0 = System.nanoTime()
-        val ms =
-          try { f().write.mode("overwrite").format("noop").save(); (System.nanoTime() - t0) / 1000000L }
-          catch { case _: Throwable => -1L }
-        s""""$n":$ms"""
-      }.mkString("{", ",", "}")
-    graft.ops.Caches.invalidate()
-    // Per-STAGE decomposition of the q42 build (VERDICT r17 #4: three
-    // rounds of sporadic 6-11 s cold outliers on `embedding_neardup_pairs`
-    // with warm ~300 ms — GC? band-join AQE skew split? sign-pass JIT?).
-    // The build registers its persisted frames in dependency order
-    // (postings: repartition + 2560-plane sign pass + band explode; then
-    // verified pairs: band self-join + two verify joins + distinct), so
-    // materializing the registration log front-to-back times each stage
-    // against warm prerequisites. Each stage also carries the JVM GC-time
-    // delta across its run — if the outlier recurs, its line now says
-    // whether the seconds went to collection pauses or to compute.
-    // Additive BENCH_DETAIL field; no query's charge changes.
-    val embeddingStagesJson: String =
-      if (only.nonEmpty) "null"
-      else {
-        import scala.jdk.CollectionConverters._
-        def gcMs(): Long = java.lang.management.ManagementFactory
-          .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-        try {
-          graft.ops.Caches.invalidate()
-          val tc0 = System.nanoTime()
-          val pairs = graft.ops.SimilarityOps.embeddingNeardupPairs(
-            spark, sfDir, Some(graft.ops.SimilarityOps.OracleGeometry))
-          val constructMs = (System.nanoTime() - tc0) / 1000000L
-          val stageNames = Seq("posts", "verified_pairs")
-          val stages = graft.ops.Caches.registrationLog.zipWithIndex.map {
-            case ((_, frame), i) =>
-              val g0 = gcMs()
-              val t0 = System.nanoTime()
-              frame.write.mode("overwrite").format("noop").save()
-              val ms = (System.nanoTime() - t0) / 1000000L
-              val name = if (i < stageNames.size) stageNames(i) else s"stage$i"
-              s""""$name":{"ms":$ms,"gc_ms":${gcMs() - g0}}"""
-          }
-          val gw0 = gcMs()
-          val tw0 = System.nanoTime()
-          pairs.write.mode("overwrite").format("noop").save()
-          val warm = s""""warm":{"ms":${(System.nanoTime() - tw0) / 1000000L},"gc_ms":${gcMs() - gw0}}"""
-          (s""""construct_ms":$constructMs""" +: stages :+ warm).mkString("{", ",", "}")
-        } catch { case _: Throwable => "null" }
-      }
-    graft.ops.Caches.invalidate()
-    // Codegen/planning overhead estimate: a NO-shared-build query timed
-    // cold in the main loop vs re-run now (generated-class and plan caches
-    // warm, no persisted frames involved) — the per-query first-run tax
-    // that is NOT a shared-build charge. Flagged queries' residual
-    // (cold − construct − Σbuilds − warm) should sit near this number.
-    val codegenProbe = "q01_pricing_summary"
-    val codegenMs: Long = results
-      .find(r => r._1 == codegenProbe && r._3)
-      .map { case (_, coldMs, _) =>
-        graft.ops.Caches.invalidate()
-        try {
-          val t0 = System.nanoTime()
-          SparkEntry.queries(codegenProbe)(spark, sfDir)
-            .write.mode("overwrite").format("noop").save()
-          math.max(0L, math.round(coldMs) - (System.nanoTime() - t0) / 1000000L)
-        } catch { case _: Throwable => -1L }
-      }
-      .getOrElse(-1L)
     // Per-query codegen charge (the controlled-rerun method): the flagged
     // rerun above re-times the SAME work with the JVM's generated classes
     // and plan fragments warm, decomposed as construct + Σbuilds + warm —
     // so cold − that sum IS the first-in-JVM codegen/classloading premium
-    // for THIS query's expression family, measured per query rather than
-    // assumed from the global light-family probe (which undercharges the
-    // heavy LSH/CC families by ~2-3 s). With the charge on each line,
-    // every slow_4x entry decomposes from numbers in the artifact alone.
+    // for THIS query's expression family, measured per query. With the
+    // charge on each line, every slow_4x entry decomposes from numbers in
+    // the artifact alone.
     def buildsJson(name: String, coldMs: Double): String =
       slowDetail.get(name).map { d =>
         val b = d.builds.map { case (t, ms) => s""""$t":$ms""" }.mkString("{", ",", "}")
@@ -1130,27 +378,8 @@ object Bench {
       .map { case (k, v, _) => s"\"$k\":${math.round(v) / 1000.0}" }
       .mkString("{", ",", "}")
 
-    // streaming throughput only on full-registry runs (a filtered
-    // profiling loop shouldn't pay a fixed multi-second pipeline run),
-    // and guarded: a streaming failure must not discard the per-query
-    // results the whole suite just spent minutes producing
-    val streamingJson =
-      if (only.nonEmpty) "null"
-      else
-        try {
-          val rows = sys.env.getOrElse("SPARK_GRAFT_STREAM_ROWS", "200000").toInt
-          // burst = max throughput (one backlog, few big micro-batches);
-          // sustained = steady-state cadence (8 drained waves, each paying
-          // trigger scheduling + the per-micro-batch ack round trip)
-          streamingBlockJson(spark, rows)
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] streaming FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-            s"""{"error":"${e.getClass.getSimpleName}"}"""
-        }
-
     val detail = new StringBuilder
-    detail ++= s"""{"sf":"$sfDir","action":"noop-write","cache_invalidated_between_queries":true,"n":${results.size},"total_sec":${math.round(totalSec * 1000) / 1000.0},"median_ms":${math.round(median)},"calibration_ms":$calibrationMs,"failed":$failedJson,"streaming":$streamingJson,"queries_ms":"""
+    detail ++= s"""{"sf":"$sfDir","action":"noop-write","cache_invalidated_between_queries":true,"n":${results.size},"total_sec":${math.round(totalSec * 1000) / 1000.0},"median_ms":${math.round(median)},"calibration_ms":$calibrationMs,"failed":$failedJson,"queries_ms":"""
     detail ++= results.map { case (k, v, _) => s"\"$k\":${math.round(v)}" }.mkString("{", ",", "}")
     // measured Janino compile ms per query (main-loop accumulator deltas):
     // nonzero only where the query actually compiled something new —
@@ -1162,96 +391,44 @@ object Bench {
     detail ++= s""","query_builds":${queryBuilds.toSeq.sortBy(_._1).map { case (q, bs) =>
         s""""$q":${bs.map("\"" + _ + "\"").mkString("[", ",", "]")}"""
       }.mkString("{", ",", "}")}"""
-    detail ++= s""","codegen_ms_estimate":$codegenMs,"codegen_measured_total_ms":$codegenMeasuredTotalMs"""
+    detail ++= s""","codegen_measured_total_ms":$codegenMeasuredTotalMs"""
     // slow_n = WARM-gated (the stdout gate); slow_4x = every cold-flagged
     // candidate with its full decomposition, info regardless of the gate
-    detail ++= s""","asof_exec_vs_smj":$asofVsSmj"""
     detail ++= s""","slow_n":${warmSlow.size},"cold_flagged_n":${slow.size},"slow_inconsistent":$inconsistentJson"""
-    detail ++= s""","embedding_build_stages":$embeddingStagesJson"""
-    detail ++= s""","shared_build_ms":$sharedJson,"slow_4x":${slow.map { case (k, v, _) => s"""{"q":"$k","ms":${math.round(v)},"warm_ms":${warmMs(k)}${buildsJson(k, v)}}""" }.mkString("[", ",", "]")}}"""
-    // full-registry runs own BENCH_DETAIL.json (the committed round-over-
-    // round record); filtered profiling runs write a _LOCAL twin so they
-    // never clobber the full-run numbers
+    detail ++= s""","slow_4x":${slow.map { case (k, v, _) => s"""{"q":"$k","ms":${math.round(v)},"warm_ms":${warmMs(k)}${buildsJson(k, v)}}""" }.mkString("[", ",", "]")}}"""
+    // Both artifacts live in ONE directory, resolved once to an absolute
+    // path (the working directory) and printed, so a reader never has to
+    // guess where a run left them. Full-registry runs own BENCH_DETAIL.json
+    // (the committed round-over-round record); filtered profiling runs
+    // write a _LOCAL twin so they never clobber the full-run numbers.
+    val outDir = new java.io.File("").getAbsoluteFile
     val detailName = if (only.isEmpty) "BENCH_DETAIL.json" else "BENCH_DETAIL_LOCAL.json"
-    val detailPath = new java.io.File(detailName).getAbsolutePath
-    val pw = new java.io.PrintWriter(detailPath, "UTF-8")
-    try pw.println(detail.toString) finally pw.close()
+    def writeArtifact(name: String, text: String): Unit = {
+      val f = new java.io.File(outDir, name)
+      val pw = new java.io.PrintWriter(f, "UTF-8")
+      try pw.println(text) finally pw.close()
+      System.err.println(s"[bench] wrote ${f.getPath}")
+    }
+    writeArtifact(detailName, detail.toString)
     System.err.println(s"[bench-detail] $detail")
 
     // The stdout summary must survive the driver's 2 KB tail window as ONE
-    // parseable line (r12's "parsed": null was the full streaming
-    // durations_ms maps riding along). The streaming block is compacted to
-    // sec / rows_per_sec / state per scenario — every stripped field is in
-    // BENCH_DETAIL.json — and a last-resort guard drops the streaming
-    // block entirely rather than ever emitting an unparseable truncation.
+    // parseable line; the slow list is the only part that can grow, so it
+    // yields to a pointer into BENCH_DETAIL.json rather than ever emitting
+    // an unparseable truncation.
     val stdoutLine = {
-      def line(streamingPart: String, slowPart: String) =
-        s"""{"metric":"total","value":${math.round(totalSec * 1000) / 1000.0},"unit":"sec","sf":"$sfDir","action":"noop-write","cache_invalidated":true,"n":${results.size},"failed":${failed.size},"failed_queries":$failedJson,"median_ms":${math.round(median)},"p90_ms":${pct(0.90)},"p99_ms":${pct(0.99)},"max_ms":${pct(1.0)},"slow_budget_x":4.0,"slow_n":${warmSlow.size},"cold_flagged_n":${slow.size},"slow":$slowPart,"slow_inconsistent":$inconsistentJson,"codegen_ms_estimate":$codegenMs,"calibration_ms":$calibrationMs,"queries":$headline,"streaming":$streamingPart,"detail_file":"$detailName"}"""
-      val candidates = Seq(
-        line(compactStreamingJson(streamingJson), slowJson),
-        line(compactStreamingJson(streamingJson), "\"see_detail\""),
-        line("\"see_detail\"", "\"see_detail\"")
-      )
-      candidates.find(_.length <= 1900).getOrElse(candidates.last)
+      def line(slowPart: String) =
+        s"""{"metric":"total","value":${math.round(totalSec * 1000) / 1000.0},"unit":"sec","sf":"$sfDir","action":"noop-write","cache_invalidated":true,"n":${results.size},"failed":${failed.size},"failed_queries":$failedJson,"median_ms":${math.round(median)},"p90_ms":${pct(0.90)},"p99_ms":${pct(0.99)},"max_ms":${pct(1.0)},"slow_budget_x":4.0,"slow_n":${warmSlow.size},"cold_flagged_n":${slow.size},"slow":$slowPart,"slow_inconsistent":$inconsistentJson,"calibration_ms":$calibrationMs,"queries":$headline,"detail_file":"$detailName"}"""
+      val full = line(slowJson)
+      if (full.length <= 1900) full else line("\"see_detail\"")
     }
-    // Contract restoration (VERDICT r17 #1): the driver's stdout parse has
-    // recorded parsed:null since r14 — sbt prefixes every stdout line with
-    // "[info] ", so the one-line JSON never parsed driver-side. The EXACT
-    // same line is therefore also written verbatim to BENCH_LINE.json in
-    // the working directory (repo root under the driver's invocation), a
-    // clean machine-consumable copy with no log framing. Full-registry
-    // runs only, mirroring BENCH_DETAIL.json ownership — a filtered
-    // profiling run must never clobber the driver-facing artifact.
-    if (only.isEmpty) {
-      val lw = new java.io.PrintWriter("BENCH_LINE.json", "UTF-8")
-      try lw.println(stdoutLine) finally lw.close()
-    }
+    // sbt prefixes every forked stdout line with "[info] ", so the EXACT
+    // same line is also written verbatim to BENCH_LINE.json beside
+    // BENCH_DETAIL.json: a clean machine-consumable copy with no log
+    // framing. Full-registry runs only, mirroring BENCH_DETAIL.json
+    // ownership — a filtered profiling run must never clobber it.
+    if (only.isEmpty) writeArtifact("BENCH_LINE.json", stdoutLine)
     println(stdoutLine)
-    spark.stop()
-  }
-
-  /** Compact a streaming block for the stdout line: keep the per-scenario
-    * headline numbers (sec, rows_per_sec, state footprint), strip the
-    * per-phase `durations_ms` maps and per-run counters — those stay in
-    * BENCH_DETAIL.json. The block's JSON is generated above with flat
-    * one-level duration maps, so the textual strip is exact.
-    */
-  private[graft] def compactStreamingJson(full: String): String =
-    full
-      .replaceAll(""","durations_ms":\{[^}]*\}""", "")
-      .replaceAll(""","micro_batches":-?\d+""", "")
-      .replaceAll(""","processed":-?\d+""", "")
-      .replaceAll(""","matched":-?\d+""", "")
-      .replaceAll(""","emitted":-?\d+""", "")
-      .replaceAll(""","state_rows_max":-?\d+""", "")
-}
-
-/** Streaming-only bench entry for local profiling: the five pipeline
-  * scenarios (burst / sustained / single_group / rate_limited / drain)
-  * without the full registry sweep — iterate on the pipeline's hot
-  * path with a ~30 s loop instead of a ~5 min one.
-  */
-object StreamBench {
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val rows = sys.env.getOrElse("SPARK_GRAFT_STREAM_ROWS", "200000").toInt
-    val reps = sys.env.getOrElse("SPARK_GRAFT_STREAM_REPS", "1").toInt
-    val only = sys.env.get("SPARK_GRAFT_STREAM_ONLY")
-    (1 to reps).foreach { i =>
-      val block = only match {
-        case Some("interval_join") => Bench.intervalJoinBlockJson(spark, rows)
-        case Some("asof_bounded")  => Bench.asofBoundedBlockJson(spark, rows)
-        case _                     => Bench.streamingBlockJson(spark, rows)
-      }
-      println(s"""{"rep":$i,"streaming":$block}""")
-    }
     spark.stop()
   }
 }

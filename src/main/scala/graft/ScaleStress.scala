@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 
 /** 10× scale stress of the shared-build family and the native joins —
@@ -152,7 +153,7 @@ object ScaleStress {
           System.err.println(f"[stress] $name: $sec%.2f s, $n rows")
           Some((name, sec, n))
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             val sec = (System.nanoTime() - t0) / 1e9
             System.err.println(
               f"[stress] $name FAILED after $sec%.2f s: ${e.getClass.getSimpleName}: ${e.getMessage}")

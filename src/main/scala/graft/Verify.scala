@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -34,8 +35,8 @@ object Verify {
         // question is a column-name/type drift — answer it from the log
         System.err.println(s"[verify-schema] $name: ${df.schema.simpleString}")
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[verify] $name failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

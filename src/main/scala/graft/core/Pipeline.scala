@@ -6,8 +6,9 @@ import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ack.Acknowledger
 import graft.config.{BatcherConfig, PipelineConfig}
-import graft.model.{BatchInfo, BatchMode, Message, MessageStatus}
+import graft.model.{BatchInfo, Message, MessageStatus}
 import graft.runtime.{PipelineRegistry, StageCounters, StageMetrics}
+import graft.streaming.KeyedBatcher
 
 /** The pipeline engine: Broadway's producer → processor → batcher →
   * batch-processor topology (/root/reference/guides/internals/architecture.md:
@@ -253,41 +254,22 @@ object Pipeline {
   }
 
   /** Chunk one (batcher, batchKey) group into batches with trigger labels.
-    * Full chunks (fixed size or splitter-emitted) are "size"; a flush-mode
-    * message delivers the open chunk AT that message (batcher_stage.ex:
-    * 178-179 — later messages in the group start a new chunk, same
-    * per-message semantics as KeyedBatcher); a trailing partial chunk is
-    * "timeout" (micro-batch-aligned timeout). Splitter path mirrors the
-    * tuple batch_size semantics (options.ex:233-263): accumulator folds
-    * until the step says emit.
+    * The boundary rule is [[KeyedBatcher.foldGroup]]'s, run with no prior
+    * open batch: full chunks (fixed size or splitter-emitted) are "size", a
+    * flush-mode message delivers the open chunk AT that message
+    * (batcher_stage.ex:178-179), and the trailing partial chunk is
+    * "timeout" (micro-batch-aligned timeout).
     */
   def splitBatches[A](
       msgs: Seq[Message[A]],
       bc: BatcherConfig[A]
   ): Seq[(Seq[Message[A]], String)] = {
-    val out = Vector.newBuilder[(Seq[Message[A]], String)]
-    var cur = Vector.empty[Message[A]]
-    var acc = bc.batchSplitter.map(_.init).getOrElse(0L)
-    def emit(trigger: String): Unit =
-      if (cur.nonEmpty) {
-        out += ((cur, trigger))
-        cur = Vector.empty
-        acc = bc.batchSplitter.map(_.init).getOrElse(0L)
-      }
-    msgs.foreach { m =>
-      cur :+= m
-      bc.batchSplitter match {
-        case Some(sp) =>
-          val (emitNow, next) = sp.step(m, acc)
-          acc = next
-          if (emitNow) emit("size")
-        case None =>
-          if (cur.size >= bc.batchSize) emit("size")
-      }
-      if (m.batchMode == BatchMode.Flush) emit("flush")
-    }
-    emit("timeout")
-    out.result()
+    // no prior state means no deadline to check: within one group only
+    // size, splitter and flush cut, and what stays open is the "timeout" chunk
+    val (emitted, open) = KeyedBatcher.foldGroup[A](
+      bc.name, "", prior = None, now = 0L, msgs, bc.batchSize, batchTimeoutMs = 0L,
+      bc.batchSplitter)
+    emitted.map(b => (b.messages, b.trigger)) ++ open.map(o => (o._1, "timeout"))
   }
 
   /** Start a streaming pipeline over a source of already-wrapped messages.

@@ -1007,6 +1007,17 @@ class EventTimeSpec extends SparkSpec {
       }
     }
   }
+
+  test("statePartitionsForVolume: floor at small state, linear in bytes beyond it") {
+    import graft.streaming.EventTime.statePartitionsForVolume
+    assert(statePartitionsForVolume(0L) == 8) // the measured small-state optimum
+    assert(statePartitionsForVolume(20L * 1024 * 1024) == 8) // bench-scale state stays at the floor
+    assert(statePartitionsForVolume(1024L * 1024 * 1024) == 32) // 1 GB / 32 MB
+    assert(statePartitionsForVolume(1024L * 1024 * 1024 + 1) == 33) // ceil, not floor
+    assert(statePartitionsForVolume(100L << 30, targetBytesPerPartition = 64L << 20) == 1600)
+    assert(statePartitionsForVolume(0L, minPartitions = 4) == 4)
+    intercept[IllegalArgumentException](statePartitionsForVolume(-1L))
+  }
 }
 
 /** Batch-id-keyed output probe for the checkpoint-restart test: a replayed

@@ -105,13 +105,20 @@ def main() -> int:
           f"{bench_path}{', ' + sbt_log if sbt_log else ''})**:")
     print(f"  - oracle: **{ok}/{total} green** ({correctness_path})")
     print(f"  - {tests_line}")
+    # optional fields: older artifacts carry codegen_ms_estimate, newer
+    # ones codegen_measured_total_ms; print whichever is there, never None
+    codegen = ""
+    if bench.get("codegen_ms_estimate") is not None:
+        codegen = f"codegen est {bench['codegen_ms_estimate']} ms, "
+    elif bench.get("codegen_measured_total_ms") is not None:
+        codegen = f"codegen measured {bench['codegen_measured_total_ms']} ms, "
     print(f"  - bench ({bench.get('sf')}, cache-invalidated, {bench.get('action')}): "
           f"**{bench.get('n')} queries / {bench.get('failed')} failed / "
           f"median {bench.get('median_ms')} ms / total {bench.get('value')} s**; "
-          f"p90 {bench.get('p90_ms')} ms, p99 {bench.get('p99_ms')} ms, "
+          f"p90 {bench.get('p90_ms', 'n/a')} ms, p99 {bench.get('p99_ms', 'n/a')} ms, "
           f"slow_n={bench.get('slow_n')} (warm-gated; cold-flagged "
           f"{bench.get('cold_flagged_n', 'n/a')}), "
-          f"codegen est {bench.get('codegen_ms_estimate')} ms, "
+          f"{codegen}"
           f"calibration {bench.get('calibration_ms', 'n/a')} ms "
           f"(divide cross-round ratios by the calibration ratio before "
           f"calling a delta a regression)")
